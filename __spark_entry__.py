@@ -79,24 +79,18 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: compile the constraint spec once, emit violation rows for
     sf0.001 lineitem plus referential-orphan violations vs orders."""
-    from sparkschema.compiler.table import compile_table_spec
+    from sparkschema.compiler.table import compile_table_spec, keyed_violations
     from sparkschema.operators.referential import orphan_violations
 
     sf = "/root/testdata/sf0.001"
+    keys = ["l_orderkey", "l_linenumber"]
     li = spark.read.parquet(_t(sf, "lineitem"))
     orders = spark.read.parquet(_t(sf, "orders"))
-    cts = compile_table_spec(FLAGSHIP_LINEITEM_SPEC, li,
-                             key_cols=["l_orderkey", "l_linenumber"])
-    row_viols = cts.violations(li)
-    ref_viols = orphan_violations(
-        li, "l_orderkey", orders, "o_orderkey",
-        key_cols=["l_orderkey", "l_linenumber"], ref_name="orders",
-        strategy="broadcast"
-    ).select(F.col("l_orderkey").cast("string"),
-             F.col("l_linenumber").cast("string"),
-             "keyword", "schema_path", "instance_path", "value", "msg",
-             "errors", "resolution_scope", "referrer")
-    return row_viols.unionByName(ref_viols)
+    cts = compile_table_spec(FLAGSHIP_LINEITEM_SPEC, li, key_cols=keys)
+    ref_viols = orphan_violations(li, "l_orderkey", orders, "o_orderkey",
+                                  key_cols=keys, ref_name="orders",
+                                  strategy="broadcast")
+    return cts.violations(li).unionByName(keyed_violations(ref_viols, keys))
 
 
 # ---------------------------------------------------------------------------

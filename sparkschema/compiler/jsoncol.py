@@ -23,18 +23,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-VIOLATION_ARRAY_TYPE = T.ArrayType(T.StructType([
-    T.StructField("keyword", T.StringType()),
-    T.StructField("schema_path", T.StringType()),
-    T.StructField("instance_path", T.StringType()),
-    T.StructField("value", T.StringType()),
-    T.StructField("msg", T.StringType()),
-    # nested sub-errors (compact JSON) + ref metadata, as in the
-    # reference's error object (SchemaUtil.scala:28-39, Results.scala:42-43)
-    T.StructField("errors", T.StringType()),
-    T.StructField("resolution_scope", T.StringType()),
-    T.StructField("referrer", T.StringType()),
-]))
+from sparkschema.compiler.table import VIOLATION_SCHEMA
+
+VIOLATION_ARRAY_TYPE = T.ArrayType(VIOLATION_SCHEMA)
 
 
 def _build_validator(schema_text: str, docs_text: str, dialect: str,
@@ -134,9 +125,8 @@ def json_valid_column(json_col: Column | str, schema: Any,
 def validate_json_column(df: DataFrame, json_col: str, schema: Any,
                          key_cols: list[str] | None = None,
                          registry=None, dialect: str | None = None) -> DataFrame:
-    """Violation rows for a JSON-text column: ``(key..., keyword,
-    schema_path, instance_path, value, msg)`` — same contract as the
-    typed-table path."""
+    """Violation rows for a JSON-text column: ``(key..., VIOLATION_SCHEMA
+    fields)`` — same contract as the typed-table path."""
     _, violations_udf = _make_udfs(schema, registry, dialect)
     keys = key_cols or [df.columns[0]]
     return (

@@ -67,25 +67,9 @@ def _vtype(v: Column) -> Column:
     return F.schema_of_variant(v)
 
 
-def _is_string(v: Column) -> Column:
-    return _vtype(v) == "STRING"
-
-
-def _is_bool(v: Column) -> Column:
-    return _vtype(v) == "BOOLEAN"
-
-
 def _is_numberv(v: Column) -> Column:
     t = _vtype(v)
     return t.isin("BIGINT", "DOUBLE", "FLOAT") | t.startswith("DECIMAL")
-
-
-def _is_array(v: Column) -> Column:
-    return _vtype(v).startswith("ARRAY")
-
-
-def _is_object(v: Column) -> Column:
-    return _vtype(v).startswith("OBJECT") | _vtype(v).startswith("STRUCT")
 
 
 def _num(v: Column) -> Column:

@@ -34,10 +34,9 @@ _AUTO_KERNEL_BYTES = 64 * 1024 * 1024
 #: minhash_lsh_pairs exact-verify kernel gates (rationale at the use
 #: site): candidate-pair count at which the injectivity-certified
 #: hashed-shingle intersect pays for its certificate aggregate, and the
-#: candidate-doc count under which the shingle table broadcasts
-#: (~10 KB/doc ⇒ ≤1 GB of broadcast at the gate).
+#: estimated shingle-table size under which it broadcasts.
 _HASH_VERIFY_MIN_PAIRS = 1_000_000
-_SHINGLE_BROADCAST_MAX_DOCS = 100_000
+_SHINGLE_BROADCAST_MAX_BYTES = 1 << 30
 
 
 def _resolve_impl(impl: str, df: DataFrame) -> str:
@@ -427,14 +426,20 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
                 "id", F.transform("sh", lambda s: F.xxhash64(s)).alias("sh")))
     side_a = shs_v.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
     side_b = shs_v.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    # broadcast the shingle table when the candidate-doc count is small
-    # enough (~10 KB/doc ⇒ ≤1 GB at the gate): both verify joins go
-    # map-side and the candidate PAIRS never shuffle with arrays
+    # broadcast the shingle table when it is small enough: both verify
+    # joins go map-side and the candidate PAIRS never shuffle with arrays
     # attached — the same size-gated strategy as the signature estimate
     # above (guide §3.1). 103 s -> 57 s at 42k candidate docs before
     # the hash kernel; beyond the gate the shuffled join is the only
-    # plan that fits.
-    if shs_v.count() <= _SHINGLE_BROADCAST_MAX_DOCS:
+    # plan that fits. The gate is on estimated BYTES, not docs: a doc
+    # carries ~1 shingle per char, so long documents grow the payload
+    # without growing the count. Each array element takes 8 B as a
+    # hashed LONG; a k-char string takes an 8 B slot plus its
+    # word-aligned bytes; each row adds its id and array header.
+    n_docs, n_elems = shs_v.agg(F.count(F.lit(1)),
+                                F.sum(F.size("sh"))).collect()[0]
+    width = 8 if shs_v is not shs else 8 + 8 * -(-shingle_k // 8)
+    if 16 * n_docs + width * (n_elems or 0) <= _SHINGLE_BROADCAST_MAX_BYTES:
         side_a, side_b = F.broadcast(side_a), F.broadcast(side_b)
     verified = est.join(side_a, "id_a").join(side_b, "id_b")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))

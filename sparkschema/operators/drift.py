@@ -18,33 +18,6 @@ from pyspark.sql import functions as F
 from sparkschema.operators.stats import histogram
 
 
-def chi_square_histograms(obs: DataFrame, exp: DataFrame) -> DataFrame:
-    """Chi-square statistic between two bucket-count frames
-    ``(bucket, cnt)``. Expected counts are scaled to the observed total;
-    empty expected buckets get a 0.5 Laplace floor so novel buckets count
-    as drift instead of dividing by zero.
-
-    Returns one row ``(statistic double, dof long, n_obs, n_exp)``.
-    """
-    o = obs.groupBy("bucket").agg(F.sum("cnt").alias("o"))
-    e = exp.groupBy("bucket").agg(F.sum("cnt").alias("e"))
-    joined = o.join(e, "bucket", "full_outer").fillna(0, ["o", "e"])
-    totals = joined.agg(F.sum("o").alias("no"), F.sum("e").alias("ne")).collect()[0]
-    n_o, n_e = totals["no"] or 0, totals["ne"] or 0
-    if n_o == 0 or n_e == 0:
-        raise ValueError("chi-square needs non-empty histograms on both sides")
-    scale = n_o / n_e
-    return joined.agg(
-        F.sum(
-            F.pow(F.col("o") - F.greatest(F.col("e") * scale, F.lit(0.5)), 2)
-            / F.greatest(F.col("e") * scale, F.lit(0.5))
-        ).alias("statistic"),
-        (F.count(F.lit(1)) - 1).cast("long").alias("dof"),
-        F.lit(n_o).alias("n_obs"),
-        F.lit(n_e).alias("n_exp"),
-    )
-
-
 def ks_histograms(obs: DataFrame, exp: DataFrame) -> DataFrame:
     """Binned two-sample KS statistic: max |CDF_obs − CDF_exp| over the
     union of buckets, computed with a window cumsum (pure Catalyst).
@@ -77,8 +50,8 @@ def psi_histograms(obs: DataFrame, exp: DataFrame) -> DataFrame:
     Empty buckets get a 0.5-count Laplace floor **in the numerator of
     the proportion only** (denominators stay the raw totals) so a bucket
     populated on one side counts as drift instead of producing
-    ``ln(0)`` — the same floor convention as
-    :func:`chi_square_histograms`. Conventional reading: < 0.1 stable,
+    ``ln(0)`` — the same floor convention as the chi-square of
+    :func:`drift_statistics_histograms`. Conventional reading: < 0.1 stable,
     0.1–0.25 moderate shift, > 0.25 major shift.
 
     Returns one row ``(statistic double, n_obs long, n_exp long)``;
@@ -106,10 +79,11 @@ def drift_statistics_histograms(obs: DataFrame, exp: DataFrame) -> DataFrame:
     dof, psi, n_obs, n_exp)`` from two bucket-count frames
     ``(bucket, cnt)``.
 
-    Statistic definitions are IDENTICAL to :func:`ks_histograms`,
-    :func:`chi_square_histograms` (0.5 Laplace floor on scaled
-    expectations) and :func:`psi_histograms` (0.5 floor in the
-    proportion numerators only) — this is the composition a pipeline
+    Statistic definitions are IDENTICAL to :func:`ks_histograms` and
+    :func:`psi_histograms` (0.5 floor in the proportion numerators
+    only); chi-square is Σ(o−e)²/e on expectations scaled to the
+    observed total, with a 0.5 Laplace floor so novel buckets count as
+    drift instead of dividing by zero — this is the composition a pipeline
     runs when it wants the whole drift verdict as a DataFrame it can
     union into a report, e.g. per-slice pHash-weight drift at 10^12
     images. Window functions run over ≤ a few hundred joined bucket

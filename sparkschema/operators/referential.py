@@ -18,6 +18,8 @@ from typing import Literal
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sparkschema.compiler.table import violation_columns
+
 
 def orphans(fact: DataFrame, fact_col: str, dim: DataFrame, dim_col: str,
             strategy: Literal["broadcast", "shuffle", "auto"] = "auto") -> DataFrame:
@@ -40,21 +42,17 @@ def orphan_violations(fact: DataFrame, fact_col: str, dim: DataFrame,
                       ref_name: str | None = None,
                       strategy: Literal["broadcast", "shuffle", "auto"] = "auto",
                       orphans_df: DataFrame | None = None) -> DataFrame:
+    """Orphan rows rendered as violation rows ``(key_cols...,
+    VIOLATION_SCHEMA fields)``. Pass a precomputed (e.g. persisted)
+    ``orphans_df`` to share the anti-join with a verdict."""
     ref = ref_name or dim_col
     o = orphans_df if orphans_df is not None \
         else orphans(fact, fact_col, dim, dim_col, strategy)
-    return o.select(
-        *key_cols,
-        F.lit("$ref_data").alias("keyword"),
-        F.lit(f"#/properties/{fact_col}/$ref_data").alias("schema_path"),
-        F.lit(f"/{fact_col}").alias("instance_path"),
-        F.col(fact_col).cast("string").alias("value"),
-        F.concat(F.lit("Value "), F.col(fact_col).cast("string"),
-                 F.lit(f" not present in reference table {ref}.")).alias("msg"),
-        F.lit("").alias("errors"),
-        F.lit("").alias("resolution_scope"),
-        F.lit("").alias("referrer"),
-    )
+    value = F.col(fact_col).cast("string")
+    return o.select(*key_cols, *violation_columns(
+        "$ref_data", f"#/properties/{fact_col}/$ref_data", f"/{fact_col}",
+        value, F.concat(F.lit("Value "), value,
+                        F.lit(f" not present in reference table {ref}."))))
 
 
 def orphan_verdict(fact: DataFrame, fact_col: str, dim: DataFrame, dim_col: str,

@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sparkschema.compiler.table import violation_columns
+
 
 @F.pandas_udf(T.DoubleType())
 def _psnr_udf(a, b):
@@ -119,34 +121,29 @@ def roundtrip_frame(images: DataFrame, ref: DataFrame,
 
 
 def roundtrip_violations(images: DataFrame, ref: DataFrame,
-                         psnr_min: float = 40.0) -> DataFrame:
-    """Violation rows for round-trip failures, in the engine's standard
-    violation shape."""
-    f = roundtrip_frame(images, ref, psnr_min)
-    mk = lambda kw, val, msg: F.struct(  # noqa: E731
-        F.lit(kw).alias("keyword"),
-        F.lit("#/properties/bytes/x-roundtrip").alias("schema_path"),
-        F.lit("/bytes").alias("instance_path"),
-        val.cast("string").alias("value"),
-        msg.alias("msg"),
-        F.lit("").alias("errors"),
-        F.lit("").alias("resolution_scope"),
-        F.lit("").alias("referrer"),
-    )
+                         psnr_min: float = 40.0,
+                         frame: DataFrame | None = None) -> DataFrame:
+    """Violation rows ``(image_id, VIOLATION_SCHEMA fields)`` for
+    round-trip failures. Pass a precomputed (e.g. persisted)
+    :func:`roundtrip_frame` as ``frame`` to share the join and the PSNR
+    UDF with a verdict."""
+    f = frame if frame is not None else roundtrip_frame(images, ref, psnr_min)
+    mk = lambda kw, val, msg: F.struct(*violation_columns(  # noqa: E731
+        kw, "#/properties/bytes/x-roundtrip", "/bytes", val, msg))
     arr = F.array_compact(F.array(
-        F.when(f["ref_missing"], mk("x-roundtrip", F.lit("null"),
-               F.lit("No reference row for round-trip comparison."))),
+        F.when(f["ref_missing"], mk("x-roundtrip", "null",
+               "No reference row for round-trip comparison.")),
         F.when(~f["ref_missing"] & f["psnr_db"].isNull(),
-               mk("x-roundtrip", F.lit("corrupt"),
-                  F.lit("Image buffer is corrupt or truncated."))),
+               mk("x-roundtrip", "corrupt",
+                  "Image buffer is corrupt or truncated.")),
         F.when(f["psnr_db"].isNotNull() & ~f["psnr_ok"],
-               mk("x-roundtrip", F.round(f["psnr_db"], 2),
+               mk("x-roundtrip", F.round(f["psnr_db"], 2).cast("string"),
                   F.concat(F.lit("Decoded image PSNR "),
                            F.round(f["psnr_db"], 2).cast("string"),
                            F.lit(f" dB below minimum {psnr_min} dB.")))),
         F.when(~f["ref_missing"] & ~f["caption_ok"],
-               mk("x-roundtrip-caption", F.lit("caption"),
-                  F.lit("Caption differs from reference copy."))),
+               mk("x-roundtrip-caption", "caption",
+                  "Caption differs from reference copy.")),
     ))
     return (f.select("image_id", arr.alias("__v"))
              .where(F.size("__v") > 0)
@@ -155,8 +152,12 @@ def roundtrip_violations(images: DataFrame, ref: DataFrame,
 
 
 def roundtrip_verdict(images: DataFrame, ref: DataFrame,
-                      psnr_min: float = 40.0) -> DataFrame:
-    f = roundtrip_frame(images, ref, psnr_min)
+                      psnr_min: float = 40.0,
+                      frame: DataFrame | None = None) -> DataFrame:
+    """One verdict row ``(check, pass, rows, psnr_failures,
+    caption_mismatches, missing_refs, min_finite_psnr_db)``; ``frame``
+    as in :func:`roundtrip_violations`."""
+    f = frame if frame is not None else roundtrip_frame(images, ref, psnr_min)
     # coalesces: an EMPTY table is a vacuous pass with zero counters
     # (sum over zero rows is NULL — the bool(NULL)=False trap fixed for
     # null_fraction in r4); per-cause counters exclude ref_missing rows,

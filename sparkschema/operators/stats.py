@@ -17,13 +17,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_NUMERIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-            T.FloatType, T.DoubleType, T.DecimalType)
-
-
-def _is_numeric(dt: T.DataType) -> bool:
-    return isinstance(dt, _NUMERIC)
-
 
 def column_stats(df: DataFrame, columns: list[str] | None = None,
                  per_partition: bool = False,

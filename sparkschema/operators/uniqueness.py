@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sparkschema.compiler.table import violation_columns
+
 
 def duplicate_keys(df: DataFrame, keys: list[str] | str,
                    salt_lanes: int = 1) -> DataFrame:
@@ -45,26 +47,18 @@ def duplicate_violations(df: DataFrame, keys: list[str] | str,
                          salt_lanes: int = 1,
                          keyword: str = "x-unique",
                          dups: DataFrame | None = None) -> DataFrame:
-    """Duplicate keys rendered as violation rows matching the engine's
-    violation contract (keyword, schema_path, instance_path, value, msg).
-    Pass a precomputed (e.g. persisted) ``dups`` frame to share the
-    aggregation with a verdict over the same keys."""
+    """Duplicate keys rendered as violation rows ``(key...,
+    VIOLATION_SCHEMA fields)``. Pass a precomputed (e.g. persisted)
+    ``dups`` frame to share the aggregation with a verdict over the same
+    keys."""
     keys = [keys] if isinstance(keys, str) else list(keys)
     if dups is None:
         dups = duplicate_keys(df, keys, salt_lanes)
     value = F.concat_ws(",", *[F.col(k).cast("string") for k in keys])
-    return dups.select(
-        *keys,
-        F.lit(keyword).alias("keyword"),
-        F.lit("#/x-unique/" + "/".join(keys)).alias("schema_path"),
-        F.lit("/" + keys[0]).alias("instance_path"),
-        value.alias("value"),
+    return dups.select(*keys, *violation_columns(
+        keyword, "#/x-unique/" + "/".join(keys), "/" + keys[0], value,
         F.concat(F.lit("Key "), value, F.lit(" is duplicated "),
-                 F.col("dup_count").cast("string"), F.lit(" times.")).alias("msg"),
-        F.lit("").alias("errors"),
-        F.lit("").alias("resolution_scope"),
-        F.lit("").alias("referrer"),
-    )
+                 F.col("dup_count").cast("string"), F.lit(" times."))))
 
 
 def uniqueness_verdict(df: DataFrame, keys: list[str] | str,

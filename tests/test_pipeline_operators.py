@@ -540,9 +540,64 @@ def test_minhash_verify_kernels_agree(spark, monkeypatch):
     base = run()                                   # strings, broadcast
     monkeypatch.setattr(dd, "_HASH_VERIFY_MIN_PAIRS", 0)
     hashed = run()                                 # hashed, broadcast
-    monkeypatch.setattr(dd, "_SHINGLE_BROADCAST_MAX_DOCS", 0)
+    monkeypatch.setattr(dd, "_SHINGLE_BROADCAST_MAX_BYTES", 0)
     hashed_shuffled = run()                        # hashed, shuffled
     monkeypatch.setattr(dd, "_HASH_VERIFY_MIN_PAIRS", 10**18)
     strings_shuffled = run()                       # strings, shuffled
     assert base, "corpus must produce pairs for the test to bite"
     assert base == hashed == hashed_shuffled == strings_shuffled
+
+
+def _broadcast_subtrees(plan: str) -> list[str]:
+    """The text of every BroadcastExchange subtree in a plan string."""
+    lines = plan.splitlines()
+
+    def col(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    out = []
+    for i, line in enumerate(lines):
+        if "BroadcastExchange" in line:
+            sub = [line]
+            for nxt in lines[i + 1:]:
+                if col(nxt) <= col(line):
+                    break
+                sub.append(nxt)
+            out.append("\n".join(sub))
+    return out
+
+
+def test_minhash_shingle_broadcast_gate_counts_bytes(spark, monkeypatch):
+    """The exact-verify join broadcasts the shingle table only while its
+    estimated bytes (shingle elements x element width) fit
+    _SHINGLE_BROADCAST_MAX_BYTES; below that budget the shingle side is
+    shuffled and the pairs are unchanged."""
+    import sparkschema.operators.dedup as dd
+    from sparkschema.operators.caching import CacheScope
+
+    docs = [(i, f"the quick brown fox jumps over dog number {i % 7} "
+                f"with padding text {'x' * (i % 3)}") for i in range(60)]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+
+    def run():
+        with CacheScope() as scope:
+            pairs = dd.minhash_lsh_pairs(
+                df, "text", "doc_id", num_hashes=24, bands=6,
+                jaccard_min=0.5, signature_impl="expr", scope=scope)
+            plan = pairs._jdf.queryExecution().executedPlan().toString()
+            shingle_bc = [s for s in _broadcast_subtrees(plan)
+                          if "sh_a" in s or "sh_b" in s]
+            return sorted(map(tuple, pairs.collect())), shingle_bc
+
+    # only the operator's own hints may broadcast
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        broadcast, bc_sides = run()
+        monkeypatch.setattr(dd, "_SHINGLE_BROADCAST_MAX_BYTES", 0)
+        shuffled, sh_sides = run()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert broadcast and len(bc_sides) == 2, bc_sides
+    assert sh_sides == [], sh_sides
+    assert shuffled == broadcast

@@ -282,3 +282,42 @@ def test_drift_statistics_bucket_windows_only(spark):
     plan = _plan(drift_statistics_histograms(h1, h2))
     assert "Python" not in plan
     assert "Window" in plan
+
+
+def _executed_nodes(df) -> list[str]:
+    """Node names of the physical plan that runs ``df`` — the final AQE
+    plan when ``df`` has been executed — without descending into the
+    plans that built a cached relation."""
+    plan = df._jdf.queryExecution().executedPlan()
+    stack, names = [plan], []
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            node = node.executedPlan()
+        names.append(node.nodeName())
+        kids = node.children()
+        stack += [kids.apply(i) for i in range(kids.size())]
+    return names
+
+
+def test_run_validation_roundtrip_violations_reuse_persisted_facts(spark):
+    """x-roundtrip persists its fact frame in the caller's scope: the
+    verdict collect runs the join and the PSNR UDF once, and writing
+    the violations reads the cached facts instead of re-running the
+    Arrow UDF."""
+    from sparkschema.operators.caching import CacheScope
+    from sparkschema.plans.validation_run import run_validation
+
+    imgs = images_df(spark, 200, with_bytes=True, partitions=2,
+                     corrupt_fraction=0.03)
+    ref = images_df(spark, 200, with_bytes=True, variant="ref", partitions=2)
+    spec = {"properties": {"bytes": {"x-roundtrip": {"psnr_db_min": 40.0}}}}
+    with CacheScope() as scope:
+        res = run_validation(spec, imgs, ["image_id"], ref=ref, scope=scope)
+        n = res.violations.count()
+        nodes = _executed_nodes(res.violations)
+        assert "InMemoryTableScan" in nodes, nodes
+        assert "ArrowEvalPython" not in nodes, nodes
+    rt = [v for v in res.table_verdicts if v["check"] == "roundtrip:bytes"][0]
+    assert n == (rt["psnr_failures"] + rt["caption_mismatches"]
+                 + rt["missing_refs"]) > 0
