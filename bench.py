@@ -328,8 +328,6 @@ def bench_queries(spark, sf_dir: str, cpus: int,
         return {
             "uniqueness_zipf": timed(
                 lambda: duplicate_keys(skewed, "k").count()),
-            "uniqueness_zipf_salted": timed(
-                lambda: duplicate_keys(skewed, "k", salt_lanes=8).count()),
             "uniqueness_uniform_twin": timed(
                 lambda: duplicate_keys(
                     imgs.select(F.col("image_id").alias("k")), "k").count()),

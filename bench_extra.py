@@ -231,9 +231,6 @@ def _one_group(spark, which: str, probes: dict) -> dict:
             return {
                 "uniqueness_zipf": B.timed(
                     lambda: duplicate_keys(skewed, "k").count()),
-                "uniqueness_zipf_salted": B.timed(
-                    lambda: duplicate_keys(skewed, "k",
-                                           salt_lanes=8).count()),
                 "uniqueness_uniform_twin": B.timed(
                     lambda: duplicate_keys(
                         imgs.select(F.col("image_id").alias("k")),

@@ -4,8 +4,8 @@ No image libraries ship in this environment (FIXTURES.md §1), so images are
 a self-describing raw-RGB container; the "lossy" format is a 6-bit/channel
 quantization whose worst-case error (≤3/255 per sample) keeps PSNR ≥ 40 dB
 — exactly the BASELINE.json round-trip invariant. Real JPEG/PNG decode
-would slot into :func:`decode` behind the same interface (see
-sparkschema.operators.multimodal for the stub policy).
+would slot into :func:`decode` behind the same interface; the gate reads
+images through operators.imagedup, imagemeta and roundtrip.
 
 Layout (little-endian):
   magic ``b"SSI1"`` | u16 w | u16 h | u8 fmt_code | payload

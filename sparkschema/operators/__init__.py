@@ -1,3 +1,3 @@
-"""Table-level check operators: single-pass stats, salted uniqueness,
+"""Table-level check operators: single-pass stats, uniqueness,
 anti-join referential integrity, histogram drift, image round-trip, plus
 training-data-pipeline operators (dedup, similarity, text analysis)."""

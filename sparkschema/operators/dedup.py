@@ -3,8 +3,8 @@
 All hot paths are pure Catalyst expressions (higher-order functions over
 token/shingle arrays + hash-aggregations); no Python touches a row.
 
-- exact: normalize → hash → groupBy (map-side combined; salted variant via
-  operators.uniqueness for hot hashes);
+- exact: normalize → hash → groupBy (map-side combined, so a hot hash
+  collapses to one partial row per partition before the exchange);
 - MinHash + LSH: shingle → H minhashes → B bands → bucket-join; only
   same-bucket pairs are candidates, verified with exact shingle Jaccard.
   Cross-pair work is O(Σ bucket²) instead of O(n²) — the standard
@@ -150,19 +150,6 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # MinHash + LSH
-
-
-def minhash_signature(col: Column, num_hashes: int = 64, shingle_k: int = 5,
-                      seed: int = 42) -> Column:
-    """Array of ``num_hashes`` minhash values for a text column, computed
-    entirely with HOFs: shingle → xxhash64(shingle, h) → array_min."""
-    sh = char_shingles(normalized_text(col), shingle_k)
-
-    def hasher(h: int):
-        return lambda s: F.xxhash64(s, F.lit(seed + h))
-
-    return F.array(*[F.array_min(F.transform(sh, hasher(h)))
-                     for h in range(num_hashes)])
 
 
 def _minhash_sig_udf(num_hashes: int, shingle_k: int, seed: int):
@@ -796,17 +783,19 @@ def embedding_near_duplicates(df: DataFrame, vec_col: str, id_col: str,
 # connected components (pair graph -> dedup clusters)
 
 
-#: edge-count gate below which the component resolution runs as a
+#: estimated-size gate below which the component resolution runs as a
 #: driver-side union-find over the collected edge list instead of the
 #: iterative join loop. Rationale (guide §1.2 / §3.1 — same principle as
 #: a broadcast join): each propagation round costs 2 driver-scheduled
 #: jobs (an eager localCheckpoint + the convergence probe), ~0.4 s of
 #: fixed scheduling latency in local mode regardless of data size, and a
 #: real near-dup graph needs 3-5 rounds — so a 100-pair graph pays ~2 s
-#: of pure orchestration for microseconds of work. 200k edges collect to
-#: ~a few MB (well under any driver budget); beyond the gate the
-#: no-driver-state loop is the only shape that scales.
-SMALL_GRAPH_EDGES = 200_000
+#: of pure orchestration for microseconds of work. The estimate is 64 B
+#: per collected edge row plus both ids' widths (8 B numeric, the UTF-8
+#: length of a string), so numeric ids reach ~200k edges and long string
+#: ids proportionally fewer; beyond the budget the no-driver-state loop
+#: is the only shape that scales.
+_UNION_FIND_MAX_BYTES = 16 << 20
 
 
 def _union_find_components(edges: list) -> dict:
@@ -836,8 +825,7 @@ def _union_find_components(edges: list) -> dict:
 
 def near_dup_components(pairs: DataFrame, id_a: str = "id_a",
                         id_b: str = "id_b", max_iter: int = 50,
-                        scope=None,
-                        small_graph_edges: int | None = None) -> DataFrame:
+                        scope=None) -> DataFrame:
     """Resolve a near-duplicate PAIR graph into clusters: one
     ``(id, component)`` row per node that appears in ``pairs``, where
     ``component`` is the cluster's canonical representative — the
@@ -880,13 +868,12 @@ def near_dup_components(pairs: DataFrame, id_a: str = "id_a",
     fixpoint (only possible on a path graph longer than ``max_iter``) —
     a silently-partial clustering must never masquerade as converged.
 
-    ``small_graph_edges`` (default :data:`SMALL_GRAPH_EDGES`): edge
-    lists at or below this count resolve with a driver-side union-find
+    Edge lists whose estimated collected size is within
+    :data:`_UNION_FIND_MAX_BYTES` resolve with a driver-side union-find
     over the collected (deduplicated, symmetrized) edges instead of the
     iterative loop — identical output, none of the loop's per-round
     driver-scheduled jobs (the broadcast-join principle applied to the
-    component graph; see the constant's docstring for the measured
-    rationale). Pass 0 to force the distributed loop.
+    component graph; see the constant's comment for the rationale).
     """
     from sparkschema.operators.caching import default_scope
 
@@ -897,25 +884,27 @@ def near_dup_components(pairs: DataFrame, id_a: str = "id_a",
                   .where(F.col("u") != F.col("v"))
                   .dropDuplicates(["u", "v"]))
     edges = cache_scope.persist(edges)
-    # size gate (r6): the count doubles as the persist's materialization;
-    # below SMALL_GRAPH_EDGES the component resolution is a driver-side
-    # union-find over the collected edge list — identical output (the
-    # min-label fixpoint IS min-reachable-id, which union-find-by-min
-    # computes directly) for ~15 fewer driver-scheduled jobs; measured
-    # 1.8 s → <0.1 s on the 108-pair bench image graph. Collected volume
-    # is bounded by the gate (≤200k edges ≈ a few MB), the same budget
-    # class as a broadcast join's build side (guide §3.1); corpus-scale
-    # graphs take the no-driver-state loop below unchanged.
-    gate = SMALL_GRAPH_EDGES if small_graph_edges is None \
-        else small_graph_edges
-    if edges.count() <= gate:
-        from pyspark.sql import types as _T
+    # size gate: the one aggregate doubles as the persist's
+    # materialization; within the byte budget the component resolution
+    # is a driver-side union-find over the collected edge list —
+    # identical output (the min-label fixpoint IS min-reachable-id,
+    # which union-find-by-min computes directly) for ~15 fewer
+    # driver-scheduled jobs; measured 1.8 s → <0.1 s on the 108-pair
+    # bench image graph. Gating on bytes, not edges, keeps long string
+    # ids from inflating the collect past the budget.
+    dt = edges.schema["u"].dataType
 
-        dt = edges.schema["u"].dataType
+    def width(c: str) -> Column:
+        return (F.octet_length(c) if isinstance(dt, T.StringType)
+                else F.lit(8))
+
+    n_edges, id_bytes = edges.agg(
+        F.count(F.lit(1)), F.sum(width("u") + width("v"))).collect()[0]
+    if 64 * n_edges + (id_bytes or 0) <= _UNION_FIND_MAX_BYTES:
         mapping = _union_find_components(
             [(r["u"], r["v"]) for r in edges.collect()])
-        schema = _T.StructType([_T.StructField("id", dt),
-                                _T.StructField("component", dt)])
+        schema = T.StructType([T.StructField("id", dt),
+                               T.StructField("component", dt)])
         return pairs.sparkSession.createDataFrame(
             sorted(mapping.items()), schema)
     # label(u) starts at min(u, min direct neighbor) — one propagation

@@ -1,13 +1,18 @@
-"""Distribution-drift checks: two-sample chi-square and KS over histograms
-(SURVEY.md §2.4 "distribution drift").
+"""Distribution-drift checks: two-sample KS, chi-square and PSI over
+histograms (SURVEY.md §2.4 "distribution drift").
 
 Scale design: raw values never leave executors. Each side is reduced to an
 equi-width histogram (one partial-agg pass, O(buckets) exchange), then the
-test statistic is computed **in SQL** on the joined bucket counts —
-chi-square as Σ(o−e)²/e on scaled expectations, KS as max |ΔCDF| via a
-window cumsum over ≤ a few hundred bucket rows. No Python UDF in the
-default path; :func:`ks_exact_by_group` offers an ``applyInPandas`` exact
-variant for small per-group samples (numpy kernel, Arrow transfer).
+statistics are computed on the joined bucket counts (≤ a few hundred
+rows). :func:`drift_statistics_joined` owns their SQL form — chi-square as
+Σ(o−e)²/e on scaled expectations, KS as max |ΔCDF| via a window cumsum,
+PSI with a 0.5-count floor; :func:`ks_histograms` and
+:func:`psi_histograms` are projections of it. The table checks
+(:func:`drift_check`, :func:`drift_check_vs_histogram`) compute KS and
+chi-square with driver arithmetic over one collect of the joined counts
+(:func:`_drift_verdict`). No Python UDF in the default path;
+:func:`ks_exact_by_group` offers an ``applyInPandas`` exact variant for
+small per-group samples (numpy kernel, Arrow transfer).
 """
 
 from __future__ import annotations
@@ -19,58 +24,27 @@ from sparkschema.operators.stats import histogram
 
 
 def ks_histograms(obs: DataFrame, exp: DataFrame) -> DataFrame:
-    """Binned two-sample KS statistic: max |CDF_obs − CDF_exp| over the
-    union of buckets, computed with a window cumsum (pure Catalyst).
-    Returns one row ``(statistic double, n_obs, n_exp)``."""
-    o = obs.groupBy("bucket").agg(F.sum("cnt").alias("o"))
-    e = exp.groupBy("bucket").agg(F.sum("cnt").alias("e"))
-    joined = o.join(e, "bucket", "full_outer").fillna(0, ["o", "e"])
-    w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    # try_divide: an empty side (total 0) yields a NULL statistic for the
-    # caller's `ks is not None` guard instead of an ANSI DIVIDE_BY_ZERO
-    # (review find r4); non-empty results are bit-identical to `/`
-    cdf = joined.select(
-        "bucket",
-        F.try_divide(F.sum("o").over(w),
-                     F.sum("o").over(Window.partitionBy())).alias("cdf_o"),
-        F.try_divide(F.sum("e").over(w),
-                     F.sum("e").over(Window.partitionBy())).alias("cdf_e"),
-    )
-    return cdf.agg(
-        F.max(F.abs(F.col("cdf_o") - F.col("cdf_e"))).alias("statistic"),
-    )
+    """Binned two-sample KS statistic between two bucket-count frames
+    ``(bucket, cnt)``: max |CDF_obs − CDF_exp| over the union of
+    buckets. One row ``(statistic double)``; an empty side yields a NULL
+    statistic. A projection of :func:`drift_statistics_histograms`."""
+    return drift_statistics_histograms(obs, exp).select(
+        F.col("ks").alias("statistic"))
 
 
 def psi_histograms(obs: DataFrame, exp: DataFrame) -> DataFrame:
     """Population Stability Index between two bucket-count frames
     ``(bucket, cnt)``: ``Σ (p_o − p_e) · ln(p_o / p_e)`` over the union
-    of buckets, computed in SQL on the joined counts (same shape as
-    :func:`ks_histograms` — O(buckets) exchange, no Python).
-
-    Empty buckets get a 0.5-count Laplace floor **in the numerator of
-    the proportion only** (denominators stay the raw totals) so a bucket
-    populated on one side counts as drift instead of producing
-    ``ln(0)`` — the same floor convention as the chi-square of
-    :func:`drift_statistics_histograms`. Conventional reading: < 0.1 stable,
+    of buckets, with the 0.5-count floor of
+    :func:`drift_statistics_joined`. Conventional reading: < 0.1 stable,
     0.1–0.25 moderate shift, > 0.25 major shift.
 
-    Returns one row ``(statistic double, n_obs long, n_exp long)``;
-    an empty side yields a NULL statistic (``try_divide``), mirroring
-    the KS contract.
+    One row ``(statistic double, n_obs long, n_exp long)``; an empty
+    side yields a NULL statistic. A projection of
+    :func:`drift_statistics_histograms`.
     """
-    o = obs.groupBy("bucket").agg(F.sum("cnt").alias("o"))
-    e = exp.groupBy("bucket").agg(F.sum("cnt").alias("e"))
-    joined = o.join(e, "bucket", "full_outer").fillna(0, ["o", "e"])
-    tot = Window.partitionBy()
-    p_o = F.try_divide(F.greatest(F.col("o"), F.lit(0.5)),
-                       F.sum("o").over(tot))
-    p_e = F.try_divide(F.greatest(F.col("e"), F.lit(0.5)),
-                       F.sum("e").over(tot))
-    term = (p_o - p_e) * F.log(p_o / p_e)
-    return (joined.select(term.alias("t"), F.col("o"), F.col("e"))
-                  .agg(F.sum("t").alias("statistic"),
-                       F.sum("o").cast("long").alias("n_obs"),
-                       F.sum("e").cast("long").alias("n_exp")))
+    return drift_statistics_histograms(obs, exp).select(
+        F.col("psi").alias("statistic"), "n_obs", "n_exp")
 
 
 def drift_statistics_histograms(obs: DataFrame, exp: DataFrame) -> DataFrame:
@@ -79,11 +53,13 @@ def drift_statistics_histograms(obs: DataFrame, exp: DataFrame) -> DataFrame:
     dof, psi, n_obs, n_exp)`` from two bucket-count frames
     ``(bucket, cnt)``.
 
-    Statistic definitions are IDENTICAL to :func:`ks_histograms` and
-    :func:`psi_histograms` (0.5 floor in the proportion numerators
-    only); chi-square is Σ(o−e)²/e on expectations scaled to the
-    observed total, with a 0.5 Laplace floor so novel buckets count as
-    drift instead of dividing by zero — this is the composition a pipeline
+    KS is max |ΔCDF| (window cumsum); PSI is Σ (p_o − p_e) · ln(p_o /
+    p_e) with a 0.5-count Laplace floor in the proportion numerators
+    only (denominators stay the raw totals), so a bucket populated on
+    one side counts as drift instead of producing ``ln(0)``; chi-square
+    is Σ(o−e)²/e on expectations scaled to the observed total, with a
+    0.5 Laplace floor so novel buckets count as drift instead of
+    dividing by zero — this is the composition a pipeline
     runs when it wants the whole drift verdict as a DataFrame it can
     union into a report, e.g. per-slice pHash-weight drift at 10^12
     images. Window functions run over ≤ a few hundred joined bucket

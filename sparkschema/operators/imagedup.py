@@ -4,9 +4,9 @@ image axis of the input table (BASELINE.json input_hint).
 
 Pipeline shape (scale-first):
 
-1. **signature pass** — one Arrow-batched pandas UDF decodes each image
-   and emits a 64-bit DCT pHash (functions.imagecodec.dct_phash). This is
-   the only Python stage; batches are bounded by
+1. **signature pass** — one Arrow-batched ``mapInArrow`` pass decodes
+   each image and emits a 64-bit DCT pHash (functions.imagecodec.dct_phash).
+   This is the only Python stage; batches are bounded by
    ``spark.sql.execution.arrow.maxRecordsPerBatch`` (bench sets 512 for
    ~120 KB payloads). The signature table persists — at real scale you
    would write it out next to the corpus, hashes are 8 bytes/image.
@@ -28,24 +28,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-@F.pandas_udf(T.LongType())
-def _phash_udf(bufs):
-    import pandas as pd
-
-    from sparkschema.functions.imagecodec import phash_bytes
-
-    return pd.Series(
-        [None if b is None else phash_bytes(bytes(b)) for b in bufs],
-        dtype="Int64")
-
-
 def _phash_map_batches(it):
     """mapInArrow body: (id, __b) batches → (id, phash) batches.
 
     The binary column of an Arrow record batch is ONE contiguous data
     buffer plus an offsets array, so each image is sliced as a zero-copy
     memoryview instead of materializing a Python ``bytes`` object per
-    row the way the pandas-UDF path does (guide §4.2) — measured
+    row the way a pandas UDF does (guide §4.2) — measured
     5.4 s → 1.7 s for the 20 k-image / 2.6 GiB decode pass, hashes
     bit-identical (the decode kernel reads any buffer protocol object).
     """
@@ -129,15 +118,6 @@ def image_phash_pairs(df: DataFrame, bytes_col: str = "bytes",
     sigs = raw.where(F.col("phash").isNotNull())
     return hamming_pairs(sigs, "phash", "id", chunks, hamming_max,
                          max_bucket=max_bucket)
-
-
-def image_phash_dedup(df: DataFrame, bytes_col: str = "bytes",
-                      id_col: str = "image_id", **pair_kwargs) -> DataFrame:
-    """Drop perceptual near-duplicates, keeping the smaller id of each
-    pair (single-link approximation, same policy as minhash_dedup)."""
-    pairs = image_phash_pairs(df, bytes_col, id_col, **pair_kwargs)
-    drop = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(drop, on=id_col, how="left_anti")
 
 
 def phash_weight_histogram(df: DataFrame,

@@ -39,8 +39,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_BUCKETS32 = 1 << 32
-
 
 def pack_sequences(df: DataFrame, id_col: str, tokens_col: str,
                    cap: int, n_buckets: int,

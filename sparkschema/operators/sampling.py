@@ -143,30 +143,6 @@ def weighted_sample_by_group(df: DataFrame, id_col: str, group_col: str,
     return df.where(hash_fraction(F.col(id_col), salt) < threshold)
 
 
-def temperature_fractions(counts: dict[str, int], tau: float,
-                          ) -> dict[str, float]:
-    """Per-source keep fractions for temperature-based mixing: sampled
-    mass for source *i* is proportional to ``n_i**tau`` (τ=1 keeps the
-    natural distribution, τ→0 flattens toward uniform), scaled so the
-    LARGEST resulting fraction is exactly 1.0 — i.e. no source is
-    upsampled, the others are downsampled to match the temperature
-    curve (hash sampling cannot duplicate rows; duplication-based
-    upsampling is a separate epoch-repeat concern). Driver-side pure
-    Python over the (small) source-count dict; feed the result to
-    :func:`weighted_sample_by_group`."""
-    if tau < 0:
-        raise ValueError(f"tau must be >= 0, got {tau}")
-    pos = {k: v for k, v in counts.items() if v > 0}
-    if not pos:
-        return {k: 0.0 for k in counts}
-    # keep fraction ∝ n^(tau-1); normalize so max == 1.0
-    raw = {k: v ** (tau - 1.0) for k, v in pos.items()}
-    peak = max(raw.values())
-    out = {k: raw[k] / peak for k in raw}
-    out.update({k: 0.0 for k in counts if k not in pos})
-    return out
-
-
 def hash_sample(df: DataFrame, id_col: str, fraction: float,
                 salt: str = "") -> DataFrame:
     """Deterministic ``fraction`` sample: keeps rows whose hash fraction

@@ -127,13 +127,3 @@ def asof_join(left: DataFrame, right: DataFrame, on: str,
                            *[F.col(f"__m.{c}").alias(f"{c}{suffix}")
                              for c in value_cols]))
 
-
-def session_stats(sessions: DataFrame, user_col: str) -> DataFrame:
-    """Corpus-level session summary over :func:`sessionize` output:
-    one row ``(n_sessions, n_users, max_session_events,
-    avg_session_events)``. Partial-agg friendly (all combinable)."""
-    return sessions.agg(
-        F.count(F.lit(1)).cast("long").alias("n_sessions"),
-        F.countDistinct(user_col).cast("long").alias("n_users"),
-        F.max("n_events").cast("long").alias("max_session_events"),
-        F.round(F.avg("n_events"), 6).alias("avg_session_events"))

@@ -1,6 +1,7 @@
 """Text-analysis operators for training-data pipelines: language ID,
-quality scoring, token counting, document fingerprinting. Pure Column
-expressions — regex/array HOFs inside whole-stage codegen, no UDFs.
+quality scoring, token counting, n-gram repetition, URL provenance and
+benchmark decontamination. Pure Column expressions — regex/array HOFs
+inside whole-stage codegen, no UDFs.
 """
 
 from __future__ import annotations
@@ -8,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from sparkschema.operators.dedup import char_shingles, normalized_text
+from sparkschema.operators.dedup import normalized_text
 
 # tiny per-language stopword profiles (n-gram heuristic: function words are
 # the highest-signal cheap discriminator)
@@ -48,16 +49,6 @@ def whitespace_token_count(col: Column) -> Column:
 
 def word_set(col: Column) -> Column:
     return F.array_distinct(F.split(normalized_text(col), " "))
-
-
-def lang_scores(col: Column) -> list[Column]:
-    """Per-language stopword hit counts (aliased ``score_<lang>``)."""
-    ws = word_set(col)
-    out = []
-    for lang, words in LANG_PROFILES.items():
-        profile = F.array(*[F.lit(w) for w in words])
-        out.append(F.size(F.array_intersect(ws, profile)).alias(f"score_{lang}"))
-    return out
 
 
 def lang_id(col: Column) -> Column:
@@ -214,21 +205,6 @@ def quality_score(col: Column) -> Column:
     return F.when(col.isNull(), F.lit(None).cast("double")).otherwise(out)
 
 
-def content_fingerprint(col: Column) -> Column:
-    """64-bit content fingerprint of normalized text (xxhash64) — the exact
-    dedup key as a compact integer."""
-    return F.xxhash64(normalized_text(col))
-
-
-def rolling_fingerprints(col: Column, k: int = 8, keep: int = 4) -> Column:
-    """Winnowing-style fingerprint: the ``keep`` smallest hashes of the
-    k-shingle set. Robust to local edits (shared shingles keep shared
-    minima) — an array<bigint> join key for containment checks."""
-    hashes = F.transform(char_shingles(normalized_text(col), k),
-                         lambda s: F.xxhash64(s))
-    return F.slice(F.array_sort(hashes), 1, keep)
-
-
 def word_ngrams(col: Column, n: int = 3) -> Column:
     """Word-level n-grams of the normalized text as an array of joined
     strings (empty array when the doc has fewer than ``n`` words; NULL
@@ -298,7 +274,7 @@ def vocab_topk(df, text_col: str, id_col: str, k: int = 20):
             .limit(k))
 
 
-# URL / domain extraction (corpus provenance audit + blocklist filtering) --
+# URL / domain extraction (corpus provenance audit) -----------------------
 
 # Java-regex ∩ RE2 common subset (no lookaround/backrefs) so the DuckDB
 # differential oracle runs the SAME pattern verbatim; [^ \t\n\r] rather
@@ -346,22 +322,6 @@ def domain_counts(df, text_col: str, id_col: str | None = None):
              .agg(F.count(F.lit(1)).cast("long").alias("n_urls"),
                   F.countDistinct("__doc").cast("long").alias("n_docs"))
              .orderBy(F.col("n_urls").desc(), F.col("domain").asc()))
-
-
-def domain_blocklist_filter(df, text_col: str, blocked: list[str]):
-    """Drop documents whose text links to any blocked domain (exact host
-    or subdomain match) — the standard corpus scrub step downstream of
-    :func:`domain_counts`. NULL texts pass through (no URL facts).
-
-    Pure expressions: ``exists`` over the extracted URL array, no join
-    (the blocklist compiles into the predicate — at a million-entry
-    blocklist switch to a broadcast anti-join on the exploded domain)."""
-    blocked_arr = F.array(*[F.lit(b.lower()) for b in blocked])
-    doms = F.transform(urls(F.col(text_col)), lambda x: url_domain(x))
-    hit = F.exists(doms, lambda d: F.exists(
-        blocked_arr,
-        lambda b: (d == b) | d.endswith(F.concat(F.lit("."), b))))
-    return df.where(F.col(text_col).isNull() | ~F.coalesce(hit, F.lit(False)))
 
 
 # benchmark decontamination (n-gram overlap flagging) ----------------------

@@ -1,18 +1,11 @@
 """Uniqueness checks — the table-level re-expression of ``uniqueItems``
-(reference: internal/validators/ArrayConstraintValidators.scala:76-95;
-SURVEY.md §2.4 "salted hash-aggregate").
+(reference: internal/validators/ArrayConstraintValidators.scala:76-95).
 
-Scale design: the default is a single hash aggregation. For a COUNT
-aggregate, Spark's map-side partial agg collapses every partition's copies
-of a hot key to ONE partial row before the exchange, so even a
-billion-row hot key sends at most #map-partitions rows to its reducer —
-skew-immune without salting. The opt-in ``salt_lanes > 1`` path is a
-two-phase aggregation — phase 1 groups by ``(key, partition-derived
-salt)``, phase 2 merges per-salt partials — for aggregates where partial
-agg cannot collapse (e.g. huge per-partition distinct-key counts forcing
-the hash-agg sort fallback). Measured on a 20M-row near-unique key table,
-always-on salting doubled the exchanged volume (every key re-shuffled in
-phase 2), hence the adaptive default of 1 (VERDICT r1 #5).
+Scale design: a single hash aggregation on the key. For a COUNT
+aggregate, Spark's map-side partial aggregation collapses every
+partition's copies of a hot key to ONE partial row before the exchange,
+so even a billion-row hot key sends at most #map-partitions rows to its
+reducer — skew-safe without salting.
 """
 
 from __future__ import annotations
@@ -23,28 +16,14 @@ from pyspark.sql import functions as F
 from sparkschema.compiler.table import violation_columns
 
 
-def duplicate_keys(df: DataFrame, keys: list[str] | str,
-                   salt_lanes: int = 1) -> DataFrame:
-    """Keys occurring more than once: ``(key..., dup_count)``.
-
-    ``salt_lanes > 1`` opts into the two-phase salted aggregation (see
-    module docstring); the default single groupBy is already skew-safe
-    for count aggregates via map-side combine.
-    """
+def duplicate_keys(df: DataFrame, keys: list[str] | str) -> DataFrame:
+    """Keys occurring more than once: ``(key..., dup_count)``."""
     keys = [keys] if isinstance(keys, str) else list(keys)
-    if salt_lanes > 1:
-        phase1 = (
-            df.groupBy(*keys, (F.spark_partition_id() % salt_lanes).alias("__salt"))
-            .agg(F.count(F.lit(1)).alias("__c"))
-        )
-        counted = phase1.groupBy(*keys).agg(F.sum("__c").alias("dup_count"))
-    else:
-        counted = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("dup_count"))
-    return counted.where(F.col("dup_count") > 1)
+    return (df.groupBy(*keys).agg(F.count(F.lit(1)).alias("dup_count"))
+              .where(F.col("dup_count") > 1))
 
 
 def duplicate_violations(df: DataFrame, keys: list[str] | str,
-                         salt_lanes: int = 1,
                          keyword: str = "x-unique",
                          dups: DataFrame | None = None) -> DataFrame:
     """Duplicate keys rendered as violation rows ``(key...,
@@ -53,7 +32,7 @@ def duplicate_violations(df: DataFrame, keys: list[str] | str,
     keys."""
     keys = [keys] if isinstance(keys, str) else list(keys)
     if dups is None:
-        dups = duplicate_keys(df, keys, salt_lanes)
+        dups = duplicate_keys(df, keys)
     value = F.concat_ws(",", *[F.col(k).cast("string") for k in keys])
     return dups.select(*keys, *violation_columns(
         keyword, "#/x-unique/" + "/".join(keys), "/" + keys[0], value,
@@ -62,12 +41,11 @@ def duplicate_violations(df: DataFrame, keys: list[str] | str,
 
 
 def uniqueness_verdict(df: DataFrame, keys: list[str] | str,
-                       salt_lanes: int = 1,
                        dups: DataFrame | None = None) -> DataFrame:
     """One verdict row: ``(check, pass, dup_keys, dup_rows)``."""
     keys = [keys] if isinstance(keys, str) else list(keys)
     if dups is None:
-        dups = duplicate_keys(df, keys, salt_lanes)
+        dups = duplicate_keys(df, keys)
     return dups.agg(
         F.lit("unique:" + ",".join(keys)).alias("check"),
         (F.count(F.lit(1)) == 0).alias("pass"),

@@ -75,7 +75,9 @@ def run_validation(
     caller invokes
     :func:`sparkschema.operators.caching.release_default_cache` —
     long-lived sessions running many validations MUST do one of the two
-    or executor storage accumulates (ADVICE r4).
+    or executor storage accumulates (ADVICE r4). Frames persisted before
+    a runtime failure belong to the caller's scope, and ``with
+    CacheScope() as scope:`` releases them.
     """
     cache_scope = scope if scope is not None else default_scope()
 
@@ -83,9 +85,13 @@ def run_validation(
                              registry=registry)
     violations = cts.violations(df)
     table_verdicts: list[dict] = []
+    # every check is built before the first persist, so a spec error
+    # (a $ref_data dim missing from dims) raises with nothing cached
+    requests = [(req, _row_checks(req, df, key_cols, dims or {}, ref))
+                for req in cts.table_requests]
 
-    for req in cts.table_requests:
-        for chk in _row_checks(req, df, key_cols, dims or {}, ref):
+    for req, row_checks in requests:
+        for chk in row_checks:
             facts = cache_scope.persist(chk.facts)
             row = chk.verdict(facts).collect()[0]
             table_verdicts.append({**row.asDict(), "pass": bool(row["pass"])})

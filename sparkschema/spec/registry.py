@@ -18,9 +18,6 @@ from sparkschema.spec.interpreter import Validator
 from sparkschema.spec.jsonvalue import parse_json
 from sparkschema.spec.refs import DocumentIndex, RefResolver, Scope
 
-DRAFT4_URI = "http://json-schema.org/draft-04/schema"
-DRAFT7_URI = "http://json-schema.org/draft-07/schema"
-
 
 def sniff_dialect(schema: Any, default: str = "draft7") -> str:
     """Select the keyword dialect from ``$schema`` (the reference's

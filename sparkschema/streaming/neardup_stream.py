@@ -1,6 +1,5 @@
 """Streaming SimHash near-duplicate detection (SURVEY §2.7 streaming
-surface × the LLM-pipeline dedup mandate — the near-dup twin of
-:mod:`sparkschema.streaming.dedup_stream`).
+surface × the LLM-pipeline dedup mandate).
 
 Batch near-dup (``operators.dedup.simhash_candidates``) self-joins a
 signature table; a standing ingest stream can't self-join its whole
@@ -92,45 +91,15 @@ def streaming_simhash_neardup(stream_df: DataFrame, text_col: str,
         state_cap=state_cap, idle_timeout_ms=idle_timeout_ms)
 
 
-def streaming_phash_neardup(stream_df: DataFrame,
-                            bytes_col: str = "bytes",
-                            id_col: str = "image_id",
-                            ts_col: str | None = None,
-                            chunks: int = 8, hamming_max: int = 10,
-                            state_cap: int = 256,
-                            idle_timeout_ms: int | None = None
-                            ) -> DataFrame:
-    """Streaming IMAGE near-dup at ingest: the pHash decode
-    (``imagedup._phash_udf``, one Arrow pass, NULL on undecodable
-    buffers) feeds the same bounded-state chunk-pigeonhole machinery as
-    the text stream — image bytes never enter state (16-ish bytes per
-    bucket entry), and the semantics deltas (ring horizon,
-    first-arrival orientation, per-chunk rows) are identical to
-    :func:`streaming_simhash_neardup`'s documented contract."""
-    from sparkschema.operators.imagedup import _phash_udf
-
-    order = (F.col(ts_col).cast("double") if ts_col is not None
-             else F.lit(0.0))
-    sigs = (stream_df
-            .where(F.col(bytes_col).isNotNull())
-            .select(F.col(id_col).cast("string").alias("id"),
-                    _phash_udf(F.col(bytes_col)).alias("sh"),
-                    order.alias("__ord"))
-            .where(F.col("sh").isNotNull()))
-    return streaming_signature_neardup(
-        sigs, chunks=chunks, hamming_max=hamming_max,
-        state_cap=state_cap, idle_timeout_ms=idle_timeout_ms)
-
-
 def streaming_signature_neardup(sigs: DataFrame, chunks: int = 8,
                                 hamming_max: int = 12, bits: int = 64,
                                 state_cap: int = 256,
                                 idle_timeout_ms: int | None = None
                                 ) -> DataFrame:
-    """Signature-generic core shared by the text (SimHash) and image
-    (pHash) streams: ``sigs`` is any streaming frame shaped
-    ``(id string, sh long, __ord double)``; emits the match stream
-    under the module-header state/horizon contract."""
+    """Signature-generic core of :func:`streaming_simhash_neardup`:
+    ``sigs`` is any streaming frame shaped ``(id string, sh long,
+    __ord double)``; emits the match stream under the module-header
+    state/horizon contract."""
     width = bits // chunks
     mask = (1 << width) - 1
     chunk_arr = F.array(*[

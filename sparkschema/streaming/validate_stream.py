@@ -17,17 +17,6 @@ from pyspark.sql.streaming import StreamingQuery
 from sparkschema.compiler.table import CompiledTableSpec, compile_table_spec
 
 
-def streaming_violations(stream_df: DataFrame, spec: Any,
-                         key_cols: list[str], **compile_kwargs) -> DataFrame:
-    """Continuous violation stream from a streaming input (append mode).
-
-    The violation projection is stateless → works in append mode with no
-    watermark; aggregate verdicts belong in :func:`foreach_batch_validate`.
-    """
-    cts = compile_table_spec(spec, stream_df, key_cols=key_cols, **compile_kwargs)
-    return cts.violations(stream_df)
-
-
 def windowed_violation_counts(stream_df: DataFrame, spec: Any,
                               key_cols: list[str], ts_col: str,
                               window: str = "1 hour",
@@ -89,29 +78,3 @@ def foreach_batch_validate(
                         else {"availableNow": True}))
             .start())
 
-
-def windowed_phash_weight_counts(stream_df: DataFrame, ts_col: str,
-                                 phash_col: str = "phash",
-                                 window: str = "1 hour",
-                                 watermark: str = "2 hours") -> DataFrame:
-    """Continuous pHash-distribution monitoring: per-event-time-window
-    Hamming-weight histograms ``(window, bucket, cnt)`` — the streaming
-    form of :func:`sparkschema.operators.imagedup.phash_weight_histogram`
-    (the north-star "phash distribution histogram" per-partition stat).
-
-    Each finalized window's ≤65 bucket rows feed
-    :func:`sparkschema.operators.drift.drift_statistics_histograms` (or
-    ``drift_check_vs_histogram`` against a stored manifest histogram via
-    the ``x-drift {"kind": "phash_weight"}`` binning) — an encoder swap
-    or scraper-source shift in the ingest stream surfaces as drift
-    within one window of event time. The watermark bounds state exactly
-    like :func:`windowed_violation_counts`: ≤65 buckets per open window,
-    fixed memory forever. NULL hashes (undecodable) are excluded — they
-    belong to the corrupt-bytes violation stream."""
-    from pyspark.sql import functions as F
-
-    return (stream_df.where(F.col(phash_col).isNotNull())
-            .withWatermark(ts_col, watermark)
-            .groupBy(F.window(F.col(ts_col), window).alias("window"),
-                     F.bit_count(F.col(phash_col)).alias("bucket"))
-            .agg(F.count(F.lit(1)).alias("cnt")))

@@ -49,19 +49,13 @@ def test_image_phash_pairs_finds_planted_twins(spark):
     rows.append(("corrupt", bytearray(b"not an image")))
     df = spark.createDataFrame(rows, "image_id string, bytes binary")
 
-    from sparkschema.operators.imagedup import (image_phash_dedup,
-                                                image_phash_pairs)
+    from sparkschema.operators.imagedup import image_phash_pairs
     pairs = {(r.id_a, r.id_b) for r in
              image_phash_pairs(df, hamming_max=10).collect()}
     planted = {(f"a-{i}", f"b-{i}") for i in range(25)}
     assert planted <= pairs, planted - pairs
     extras = pairs - planted
     assert not extras, extras  # independent images must not collide
-
-    kept = image_phash_dedup(df, hamming_max=10)
-    ids = {r.image_id for r in kept.select("image_id").collect()}
-    assert all(f"a-{i}" in ids and f"b-{i}" not in ids for i in range(25))
-    assert "corrupt" in ids  # undecodable rows are never dropped here
 
 
 def test_image_phash_bytes_never_shuffle(spark):

@@ -223,10 +223,11 @@ def test_pipeline_query_matches_duckdb_on_hostile_corpus(
     assert a == b, f"{name}: first diffs {mismatches}"
 
 
-def test_components_random_graphs_vs_duckdb(spark):
+def test_components_random_graphs_vs_duckdb(spark, monkeypatch):
     """Direct operator fuzz: random multigraphs (self-loops, duplicate and
     reversed edges, isolated islands) through near_dup_components vs an
     independent DuckDB recursive-CTE transitive closure."""
+    from sparkschema.operators import dedup
     from sparkschema.operators.dedup import near_dup_components
 
     rng = random.Random(SEED + 77)
@@ -236,14 +237,16 @@ def test_components_random_graphs_vs_duckdb(spark):
         m = rng.randint(1, 120)
         edges = [(rng.randint(0, n), rng.randint(0, n)) for _ in range(m)]
         df = spark.createDataFrame(edges, "id_a long, id_b long")
-        # both implementations behind the r6 size gate: the driver-side
-        # union-find (default at this size) and the distributed
-        # min-label loop (forced with gate 0) must match the oracle
+        # both implementations behind the byte-budget gate: the
+        # driver-side union-find (default at this size) and the
+        # distributed min-label loop (forced with a zero budget) must
+        # match the oracle
         got = {(r.id, r.component)
                for r in near_dup_components(df).collect()}
-        got_loop = {(r.id, r.component)
-                    for r in near_dup_components(
-                        df, small_graph_edges=0).collect()}
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "_UNION_FIND_MAX_BYTES", 0)
+            got_loop = {(r.id, r.component)
+                        for r in near_dup_components(df).collect()}
         assert got == got_loop, (trial, sorted(got ^ got_loop)[:6])
 
         vals = ", ".join(f"({a}, {b})" for a, b in edges)

@@ -1,13 +1,11 @@
 """Training-data pipeline operators: dedup (exact/minhash/simhash/ngram/
 embedding), similarity search (brute force vs LSH vs IVF recall), text
-analysis, multimodal kernels."""
+analysis."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from sparkschema.operators import dedup, similarity, text
-from sparkschema.operators.multimodal import extract_image_features, resize_images
-from sparkschema.sources.synthetic import images_df
 
 SF = "/root/testdata/sf0.001"
 
@@ -213,45 +211,6 @@ def test_quality_score_ordering(spark):
     assert got["good"] > 0.7 > got["junk"] > got["empty"] >= 0.0
 
 
-def test_fingerprints(spark):
-    df = spark.createDataFrame(
-        [("a", "Some Document Text"), ("b", "some   document text"),
-         ("c", "different content")],
-        "id string, t string")
-    fp = {r.id: r.f for r in
-          df.select("id", text.content_fingerprint(F.col("t")).alias("f")).collect()}
-    assert fp["a"] == fp["b"] != fp["c"]
-    rf = {r.id: r.f for r in
-          df.select("id", text.rolling_fingerprints(F.col("t"), 4, 3).alias("f")).collect()}
-    assert rf["a"] == rf["b"]
-    assert len(rf["a"]) == 3
-
-
-# ------------------------------------------------------------ multimodal
-
-def test_extract_image_features(spark):
-    imgs = images_df(spark, 120, with_bytes=True, corrupt_fraction=0.05,
-                     partitions=2)
-    feats = extract_image_features(imgs)
-    rows = feats.collect()
-    assert len(rows) == 120
-    ok = [r for r in rows if r.ok]
-    bad = [r for r in rows if not r.ok]
-    assert ok and bad  # corrupt injection surfaced as ok=false
-    assert all(r.w in (64, 128, 256, 512) for r in ok)
-    assert all(0 <= r.mean_r <= 255 for r in ok)
-
-
-def test_resize_images_roundtrip(spark):
-    from sparkschema.functions.imagecodec import decode
-    imgs = images_df(spark, 20, with_bytes=True, corrupt_fraction=0.0,
-                     partitions=2)
-    resized = resize_images(imgs, 32, 32).collect()
-    assert len(resized) == 20
-    px, _ = decode(bytes(resized[0].bytes))
-    assert px.shape == (32, 32, 3)
-
-
 def test_cache_scope_releases_operator_caches(spark, documents):
     """VERDICT r3 #3: operator-internal persist() must be releasable — two
     sequential minhash_lsh_pairs runs leave zero cached RDDs after
@@ -338,27 +297,6 @@ def test_quality_score_null_text_is_null(spark):
     assert got[2] is not None and got[3] > got[2]
 
 
-def test_multimodal_zero_pixel_containers(spark):
-    """Review find r4: w=0/h=0 containers decode but carry no pixels —
-    features must report ok=False (was ok=True with NaN stats) and resize
-    must drop them (was an uncaught IndexError killing the task)."""
-    import struct
-
-    from sparkschema.functions.imagecodec import MAGIC
-
-    degenerate = bytes(MAGIC) + struct.pack("<HHB", 0, 0, 0)
-    rows = [("z", bytearray(degenerate))]
-    from sparkschema.functions.imagecodec import encode, synth_pixels
-    rows.append(("good", bytearray(encode(synth_pixels("g", 8, 8), "raw"))))
-    df = spark.createDataFrame(rows, "image_id string, bytes binary")
-
-    feats = {r.image_id: r.ok for r in extract_image_features(df).collect()}
-    assert feats == {"z": False, "good": True}
-
-    out = resize_images(df, 4, 4).collect()
-    assert [r.image_id for r in out] == ["good"]
-
-
 def test_null_text_dedup_semantics(spark):
     """Review find r4: NULL texts are not duplicates — exact_dedup kept
     one NULL row and dropped the rest; the expression SimHash gave every
@@ -433,39 +371,70 @@ def test_components_multiple_clusters_and_orientation(spark):
     assert got == {2: 2, 5: 2, 9: 2, 10: 10, 20: 10, 30: 10}
 
 
-def test_components_long_path_needs_iterations(spark):
-    # a 12-node path graph exercises true multi-round propagation;
-    # small_graph_edges=0 forces the distributed loop (the r6 default
+def test_components_long_path_needs_iterations(spark, monkeypatch):
+    # a 12-node path graph exercises true multi-round propagation; a
+    # zero byte budget forces the distributed loop (the default budget
     # resolves graphs this small with the driver-side union-find)
     edges = [(i, i + 1) for i in range(100, 112)]
-    for gate in (0, None):
-        comps = dedup.near_dup_components(_pairs(spark, edges),
-                                          small_graph_edges=gate)
+    for budget in (0, dedup._UNION_FIND_MAX_BYTES):
+        monkeypatch.setattr(dedup, "_UNION_FIND_MAX_BYTES", budget)
+        comps = dedup.near_dup_components(_pairs(spark, edges))
         rows = comps.collect()
         assert len(rows) == 13
         assert {r.component for r in rows} == {100}
 
 
-def test_components_loop_and_union_find_agree(spark):
+def test_components_loop_and_union_find_agree(spark, monkeypatch):
     # the two implementations must produce identical (id, component)
     # sets on a graph mixing chains, stars and singleton-free islands
     edges = ([(i, i + 1) for i in range(200, 206)]
              + [(500, k) for k in (501, 502, 503)]
              + [(900, 901)])
-    a = sorted(map(tuple, dedup.near_dup_components(
-        _pairs(spark, edges), small_graph_edges=0).collect()))
     b = sorted(map(tuple, dedup.near_dup_components(
+        _pairs(spark, edges)).collect()))
+    monkeypatch.setattr(dedup, "_UNION_FIND_MAX_BYTES", 0)
+    a = sorted(map(tuple, dedup.near_dup_components(
         _pairs(spark, edges)).collect()))
     assert a == b
 
 
-def test_components_empty_and_nonconvergence_guard(spark):
+def test_components_empty_and_nonconvergence_guard(spark, monkeypatch):
     assert dedup.near_dup_components(
         _pairs(spark, [])).collect() == []
+    monkeypatch.setattr(dedup, "_UNION_FIND_MAX_BYTES", 0)
     with pytest.raises(ValueError, match="did not converge"):
         dedup.near_dup_components(
-            _pairs(spark, [(i, i + 1) for i in range(30)]), max_iter=2,
-            small_graph_edges=0)
+            _pairs(spark, [(i, i + 1) for i in range(30)]), max_iter=2)
+
+
+def test_components_union_find_gate_counts_id_bytes(spark, monkeypatch):
+    # the driver-side union-find is gated on estimated collected BYTES:
+    # the same 4-node-path clusters stay on the driver with integer ids
+    # (80 B per directed edge) and take the distributed loop with
+    # 200-character string ids (464 B per edge, ~25 MB > 16 MiB)
+    calls = []
+    real = dedup._union_find_components
+
+    def spy(edges):
+        calls.append(len(edges))
+        return real(edges)
+
+    monkeypatch.setattr(dedup, "_union_find_components", spy)
+    n = 4 * 9_000
+    base = spark.range(n).where(F.col("id") % 4 != 3).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
+    ints = {(r.id, r.component) for r in
+            dedup.near_dup_components(base).collect()}
+    assert calls == [2 * 3 * 9_000]
+
+    def pad(c):  # zero padding keeps string order == numeric order
+        return F.lpad(F.col(c).cast("string"), 200, "0")
+
+    strs = dedup.near_dup_components(
+        base.select(pad("id_a").alias("id_a"), pad("id_b").alias("id_b")))
+    got = {(int(r.id), int(r.component)) for r in strs.collect()}
+    assert calls == [2 * 3 * 9_000]  # the loop ran, not the union-find
+    assert got == ints and len(ints) == n
 
 
 def test_near_dup_dedup_keeps_one_per_cluster(spark):

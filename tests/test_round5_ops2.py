@@ -12,7 +12,6 @@ from sparkschema.operators.normalize import (nfc_normalize_col,
                                              scrub_control_chars)
 from sparkschema.operators.packing import pack_sequences, pack_stats
 from sparkschema.operators.sampling import (hash_sample,
-                                            temperature_fractions,
                                             weighted_sample_by_group)
 
 
@@ -138,23 +137,6 @@ def test_weighted_mix_rejects_bad_fractions(spark):
         weighted_sample_by_group(df, "doc_id", "source", {"web": 1.5})
     with pytest.raises(ValueError):
         weighted_sample_by_group(df, "doc_id", "source", {}, default=-0.1)
-
-
-def test_temperature_fractions_curve():
-    counts = {"web": 1_000_000, "books": 10_000, "code": 100_000}
-    nat = temperature_fractions(counts, tau=1.0)
-    assert nat == {"web": 1.0, "books": 1.0, "code": 1.0}
-    flat = temperature_fractions(counts, tau=0.0)
-    # τ=0: kept mass equal per source => fraction ∝ 1/n, max (=smallest
-    # source) pinned at 1.0
-    assert flat["books"] == 1.0
-    assert abs(flat["web"] - 0.01) < 1e-12
-    assert abs(flat["code"] - 0.1) < 1e-12
-    mid = temperature_fractions(counts, tau=0.5)
-    assert flat["web"] < mid["web"] < nat["web"]
-    assert temperature_fractions({"a": 0, "b": 10}, 0.5)["a"] == 0.0
-    with pytest.raises(ValueError):
-        temperature_fractions(counts, -1.0)
 
 
 # ----------------------------------------------------------- normalization

@@ -8,7 +8,7 @@ import math
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from sparkschema.operators.sessions import asof_join, session_stats, sessionize
+from sparkschema.operators.sessions import asof_join, sessionize
 
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
 
@@ -47,16 +47,6 @@ def test_sessionize_null_ts_dropped(spark):
                                "user_id int, ts timestamp")
     s = sessionize(df, "user_id", "ts", "30 minutes").collect()
     assert len(s) == 1 and s[0].n_events == 1
-
-
-def test_session_stats_shape(spark):
-    df = _events(spark, [(1, _ts(0)), (1, _ts(90)), (2, _ts(0)),
-                         (2, _ts(5)), (2, _ts(10))])
-    st = session_stats(sessionize(df, "user_id", "ts", "30 minutes"),
-                       "user_id").collect()[0]
-    assert st.n_sessions == 3 and st.n_users == 2
-    assert st.max_session_events == 3
-    assert abs(st.avg_session_events - 5 / 3) < 1e-6
 
 
 def _asof_frames(spark):
@@ -131,20 +121,6 @@ def test_url_extraction_and_domain_counts(spark):
            for r in domain_counts(df, "text", id_col="id").collect()}
     # domains lower-cased; doc 1 counts once in n_docs, twice in n_urls
     assert got == {("a.example.com", 2, 1), ("other.org", 1, 1)}
-
-
-def test_domain_blocklist_filter_subdomain_and_null(spark):
-    from sparkschema.operators.text import domain_blocklist_filter
-
-    df = spark.createDataFrame(
-        [Row(id=1, text="x https://spam.bad.com/1"),     # subdomain of bad.com
-         Row(id=2, text="x https://bad.com/2"),          # exact host
-         Row(id=3, text="x https://notbad.com/3"),       # NOT a subdomain
-         Row(id=4, text="clean"),
-         Row(id=5, text=None)])                          # NULL passes
-    kept = sorted(r.id for r in
-                  domain_blocklist_filter(df, "text", ["bad.com"]).collect())
-    assert kept == [3, 4, 5]
 
 
 def test_asof_join_plan_single_exchange(spark):

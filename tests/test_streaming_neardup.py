@@ -102,45 +102,3 @@ def test_ring_buffer_horizon_evicts_oldest(spark, tmp_path):
     assert pairs == {("1", "2"), ("2", "3")}
     assert all(r.hamming == 0 for r in got)
 
-
-def test_streaming_phash_neardup_finds_cross_batch_twins(spark, tmp_path):
-    """Image-axis streaming near-dup: a jpg re-encode arriving in a LATER
-    micro-batch matches its raw original from bucket state; independent
-    images and NULL/undecodable buffers emit nothing. Differential
-    oracle: the batch pHash kernel + the same pigeonhole rule."""
-    from sparkschema.functions.imagecodec import encode, phash_bytes, synth_pixels
-    from sparkschema.streaming.neardup_stream import streaming_phash_neardup
-
-    def img(seed, fmt="raw"):
-        return bytes(encode(synth_pixels(seed, 64, 64), fmt))
-
-    file1 = [("a-0", img("s0")), ("a-1", img("s1")), ("a-2", img("s2")),
-             ("bad-0", b"not an image"), ("nul-0", None)]
-    file2 = [("b-0", img("s0", "jpg")),     # near-dup of a-0, cross-batch
-             ("b-1", img("s1")),            # exact pixel dup of a-1
-             ("b-2", img("s9"))]            # independent
-
-    src = tmp_path / "imgsrc"
-    src.mkdir()
-    for i, rows in enumerate((file1, file2)):
-        pd.DataFrame(rows, columns=["image_id", "bytes"]).to_parquet(
-            src / f"f{i}.parquet", index=False)
-    stream = (spark.readStream.schema("image_id string, bytes binary")
-              .option("maxFilesPerTrigger", 1).parquet(str(src)))
-    out = streaming_phash_neardup(stream, "bytes", "image_id",
-                                  hamming_max=10)
-    q = (out.writeStream.outputMode("append").format("memory")
-         .queryName("phash_nd_stream")
-         .option("checkpointLocation", str(tmp_path / "ckp"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
-    pairs = {(r.id_a, r.id_b) for r in
-             spark.sql("select * from phash_nd_stream").collect()}
-
-    sigs = {iid: phash_bytes(b) for iid, b in file1 + file2
-            if b is not None and phash_bytes(b) is not None}
-    expected = _expected_pairs(sigs, hamming_max=10)
-    assert pairs == expected
-    assert ("a-0", "b-0") in pairs and ("a-1", "b-1") in pairs
-    assert not any("bad-0" in p or "nul-0" in p
-                   for pair in pairs for p in pair)

@@ -69,47 +69,6 @@ def test_variant_native_predicates_in_streaming(spark, tmp_path):
     assert row.total == 60 and row.valid == expected, (row, expected)
 
 
-def test_streaming_exact_dedup_bounded_state(spark, tmp_path):
-    """Content-hash dedup on a file stream: duplicates within the
-    watermark horizon collapse to one row, NULL texts pass through, and
-    the normalized-content key matches the batch operator's."""
-    from sparkschema.streaming.dedup_stream import streaming_exact_dedup
-
-    src = str(tmp_path / "docs_src")
-    rows = [
-        (1, "Hello  World", "2024-01-01 00:00:01"),
-        (2, "hello world",  "2024-01-01 00:10:00"),   # dup of 1 (normalized)
-        (3, "unique doc",   "2024-01-01 00:20:00"),
-        (4, "HELLO WORLD ", "2024-01-01 00:30:00"),   # dup again
-        (5, None,           "2024-01-01 00:40:00"),
-        (6, None,           "2024-01-01 00:50:00"),   # NULLs both kept
-        (7, "another one",  "2024-01-01 01:00:00"),
-    ]
-    (spark.createDataFrame(rows, "doc_id long, text string, ts_s string")
-          .select("doc_id", "text", F.col("ts_s").cast("timestamp").alias("ts"))
-          .coalesce(1).write.parquet(src))
-    stream = spark.readStream.schema(
-        "doc_id long, text string, ts timestamp").parquet(src)
-    deduped = streaming_exact_dedup(stream, "text", ts_col="ts",
-                                    watermark="2 hours")
-    q = (deduped.writeStream.outputMode("append")
-         .format("memory").queryName("dedupstream")
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = spark.sql("select * from dedupstream").collect()
-    ids = sorted(r.doc_id for r in got)
-    # one representative of the hello-world group (first arrival within
-    # the single file = nondeterministic across partitions, but the file
-    # is coalesced to 1 so it's doc 1), both NULLs, 3 and 7
-    assert 3 in ids and 7 in ids
-    assert [i for i in ids if i in (5, 6)] == [5, 6]
-    assert len([i for i in ids if i in (1, 2, 4)]) == 1
-    assert len(ids) == 5
-    # schema passes through unchanged
-    assert sorted(got[0].asDict()) == ["doc_id", "text", "ts"]
-
-
 def test_sessionize_streaming_matches_batch_for_closed_sessions(spark, tmp_path):
     """sessionize() is the same expression batch and streaming: under a
     watermark + append mode, Structured Streaming emits exactly the
@@ -148,59 +107,3 @@ def test_sessionize_streaming_matches_batch_for_closed_sessions(spark, tmp_path)
                   for r in batch.collect() if r.user_id != 99)
     assert got == want and len(got) == 3
 
-
-def test_windowed_phash_weight_counts_match_batch(spark, tmp_path):
-    """Streaming per-window Hamming-weight histograms equal the batch
-    groupBy on the same rows (stateless projection + windowed count under
-    availableNow), and their totals feed the drift twin."""
-    from pyspark.sql import functions as F
-
-    from sparkschema.sources.synthetic import images_df
-    from sparkschema.streaming.validate_stream import \
-        windowed_phash_weight_counts
-
-    src = str(tmp_path / "phash_src")
-    imgs = images_df(spark, 600, partitions=2).select("image_id", "phash")
-    ts = F.timestamp_seconds(
-        F.lit(1_700_000_000)
-        + (F.abs(F.xxhash64("image_id")) % 7200))  # spread over 2 windows
-    withts = imgs.withColumn(
-        "ts", ts).withColumn(
-        "phash", F.when(F.col("image_id").endswith("7"), None)
-                  .otherwise(F.col("phash")))
-    # append mode emits only watermark-CLOSED windows: a far-future
-    # sentinel advances the final watermark past the real windows (its
-    # own window stays open and is excluded from both sides)
-    sentinel = spark.createDataFrame(
-        [("zz-sentinel", 7, 1_700_000_000 + 86_400 * 3)],
-        "image_id string, phash long, epoch long").select(
-        "image_id", "phash", F.timestamp_seconds("epoch").alias("ts"))
-    withts.unionByName(sentinel).write.parquet(src)
-    cutoff = 1_700_000_000 + 86_400
-
-    stream = spark.readStream.schema(
-        "image_id string, phash long, ts timestamp").parquet(src)
-    q = (windowed_phash_weight_counts(stream, "ts", window="1 hour",
-                                      watermark="0 seconds")
-         .writeStream.outputMode("append")
-         .format("memory").queryName("phash_hist_stream")
-         .option("checkpointLocation", str(tmp_path / "ck_ph"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {(r["window"]["start"], r["bucket"]): r["cnt"]
-           for r in spark.sql("select * from phash_hist_stream").collect()}
-
-    batch = {(r["w"]["start"], r["bucket"]): r["cnt"]
-             for r in (spark.read.parquet(src)
-                       .where(F.col("phash").isNotNull()
-                              & (F.col("ts")
-                                 < F.timestamp_seconds(F.lit(cutoff))))
-                       .groupBy(F.window("ts", "1 hour").alias("w"),
-                                F.bit_count("phash").alias("bucket"))
-                       .agg(F.count(F.lit(1)).alias("cnt"))).collect()}
-    assert got == batch and len(got) > 10
-    n_valid = (spark.read.parquet(src)
-               .where(F.col("phash").isNotNull()
-                      & (F.col("ts")
-                         < F.timestamp_seconds(F.lit(cutoff)))).count())
-    assert sum(got.values()) == n_valid

@@ -291,3 +291,18 @@ def test_x_drift_phash_weight_kind(spark, images):
     again = run_validation(spec2, images, key_cols=["image_id"])
     d2 = [v for v in again.table_verdicts if v["check"] == "drift:phash"]
     assert len(d2) == 1 and d2[0]["pass"]
+
+
+def test_spec_error_persists_nothing(spark, images):
+    """A $ref_data target missing from dims is a spec error: it raises
+    before any check persists its fact frame, so a failed run leaves
+    nothing cached — even when an x-unique check comes first."""
+    from sparkschema.operators.caching import CacheScope
+
+    spec = {"properties": {"image_id": {"x-unique": True},
+                           "fmt": {"$ref_data": "dim_fmt.fmt"}}}
+    scope = CacheScope()
+    with pytest.raises(ValueError, match="dim_fmt.fmt"):
+        run_validation(spec, images, key_cols=["image_id"], dims={},
+                       scope=scope)
+    assert scope._frames == []
